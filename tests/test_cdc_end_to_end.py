@@ -312,3 +312,61 @@ def test_cross_batch_ordering_is_batch_id_first(spark, tmp_path):
             f"{mode}: batch-id-first ordering — the later batch's change "
             "applies even with an older event timestamp"
         )
+
+
+def _jobs_of(spark, group, fn):
+    """Spark jobs ``fn`` submits, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "buckets_per_group,cold_jobs,resumed_jobs",
+    [(8, 2, 2), (2, 8, 4)],
+    ids=["single-group", "grouped"],
+)
+def test_spark_jobs_per_apply_pinned(
+    spark, tmp_path, buckets_per_group, cold_jobs, resumed_jobs
+):
+    """Pins the Spark jobs one apply runs, cold and resumed. Single-group
+    mode runs no bucket-discovery job: its merge write is the batch's
+    only pass over the events, and a resumed apply whose sealed manifest
+    made the write a no-op pays one forced pass for the input accounting.
+    Grouped mode adds the discovery job that persists the deduped batch."""
+    batches = make_batches(spark, n_batches=2)
+
+    def build(name):
+        table = bootstrap_table(spark, str(tmp_path / name), TRANSCRIPT_SCHEMA, num_buckets=8)
+        orch = CdcOrchestrator(table, buckets_per_group=buckets_per_group)
+        orch.apply_batch(batches[0][1], 1)
+        return table, orch
+
+    _, orch = build("cold")
+    rec, n_cold = _jobs_of(
+        spark, f"cold-{buckets_per_group}", lambda: orch.apply_batch(batches[1][1], 2)
+    )
+    assert "skipped" not in rec
+
+    # Kill the apply after every group is sealed (at its commit), then
+    # resume from the manifests: no group is recomputed.
+    table, orch = build("resumed")
+    orig = table.commit
+
+    def killed(**kw):
+        raise RuntimeError("simulated kill")
+
+    table.commit = killed
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        orch.apply_batch(batches[1][1], 2)
+    table.commit = orig
+    rec, n_resumed = _jobs_of(
+        spark, f"resumed-{buckets_per_group}", lambda: orch.apply_batch(batches[1][1], 2)
+    )
+    assert rec["groups"] and all(g.get("resumed") for g in rec["groups"])
+    assert (n_cold, n_resumed) == (cold_jobs, resumed_jobs)

@@ -10,6 +10,7 @@ partition needs exactly this.
 """
 
 import datetime as dt
+import json
 
 import pyspark.sql.functions as F
 import pytest
@@ -80,6 +81,9 @@ def test_late_batch_equals_serial_replay(spark, tmp_path):
 
     assert rec["late_apply"] is True
     assert rec["events_dropped_superseded"] > 0
+    # One record, written once: the metrics file is the returned record.
+    with open(tmp_path / "ooo" / "_metrics" / "batch-000003.json") as f:
+        assert json.load(f) == rec
     assert_pdf_equal(
         current_state(serial).toPandas(), current_state(ooo).toPandas(), KEY
     )

@@ -59,6 +59,11 @@ def test_compaction_materializes_identical_lineage(mor_setup, spark):
     results = compact_deltas(o_mor)
     assert len(results) == 2
     assert pending_delta_batches(t_mor.refresh()) == []
+    # Compacted files carry batch_id stats like any CoW apply's, so
+    # changelog reads can skip them.
+    snap = t_mor.snapshot
+    rels = [rel for fmap in (snap.files, snap.hist_files) for fl in fmap.values() for rel in fl]
+    assert rels and all(rel in snap.file_stats for rel in rels)
 
     # Full SCD2 lineage equals the all-CoW table (same versions, same
     # batch ids, same effective/end timestamps).

@@ -647,3 +647,27 @@ def test_streaming_wap_audit_gate(spark, tmp_path):
     run("ckpt_fresh")
     table.refresh()
     assert {r.conv_id: r.text for r in current_state(table).collect()} == state
+
+    # The staged branch keeps the orchestrator's settings: under
+    # null_key_policy='drop' a NULL-key event is filtered, not a failed
+    # epoch.
+    src_nk = tmp_path / "src_null_key"
+    spark.createDataFrame(
+        [("I", 1, "d1", 0, "user", "kept", t0),
+         ("I", 2, None, 0, "user", "null key", t0)],
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    ).coalesce(1).write.parquet(str(src_nk / "f1"))
+    t_drop = bootstrap_table(
+        spark, str(tmp_path / "lake_drop"), TRANSCRIPT_SCHEMA, num_buckets=4
+    )
+    q = start_cdc_stream(
+        stream_events(spark, str(src_nk) + "/*"),
+        CdcOrchestrator(t_drop, null_key_policy="drop"),
+        str(tmp_path / "ckpt_drop"),
+        audit_checks=[row_count_delta(max_delta=3)],
+        quarantine_dir=str(qdir),
+    )
+    q.awaitTermination(120)
+    t_drop.refresh()
+    assert {r.conv_id: r.text for r in current_state(t_drop).collect()} == {"d1": "kept"}

@@ -16,14 +16,16 @@ deterministic local protocol:
    (file list + per-bucket row counts = partition lineage). A resumed run
    skips sealed groups, recomputes unsealed ones (their partial output is
    overwritten — deterministic tags make this idempotent), then performs
-   the one atomic snapshot commit.
+   the one atomic snapshot commit. ``buckets_per_group >= num_buckets``
+   is one whole-table group: no bucket-discovery job, whole-batch resume.
 
 3. **Schema evolution**: a batch carrying new payload columns triggers a
    transactional evolve-then-apply (metadata-only schema commit, then the
    merge), per north_rule.
 
-4. **Observability**: a JSON metrics record per batch (row counts,
-   per-bucket lineage, wall time, snapshot id) lands in ``_metrics/``.
+4. **Observability**: one commit-and-record step, shared by every apply
+   path, writes a JSON record per batch (row counts, per-bucket lineage,
+   wall time, snapshot id) to ``_metrics/``.
 
 5. **Ordering repair**: ``apply_snapshot_batch`` folds late initial-
    snapshot chunks under tail deletes (DBLog rule); ``apply_late_batch``
@@ -33,9 +35,12 @@ deterministic local protocol:
 
 from __future__ import annotations
 
+import copy
 import json
+import operator
 import os
 import time
+from functools import reduce
 from typing import Sequence
 
 import pyspark.sql.functions as F
@@ -50,7 +55,14 @@ from tpc_di_spark.cdc.apply import (
     lww_dedup,
     merge_batch_rows,
 )
-from tpc_di_spark.lake.table import LakeTable
+from tpc_di_spark.cdc.mor import pending_delta_batches
+from tpc_di_spark.lake.changelog import (
+    _closing_batch_of,
+    changed_keys_since,
+    rows_closed_in,
+    rows_created_in,
+)
+from tpc_di_spark.lake.table import CommitConflict, LakeTable
 
 _STAGING = "_staging"
 _METRICS = "_metrics"
@@ -65,9 +77,13 @@ class CdcOrchestrator:
         messages_log=None,
         auto_compact_files_per_bucket: int = 0,
         null_key_policy: str = "error",
+        eager_accounting: bool = False,
     ):
         self.table = table
         self.spark = table.spark
+        # Touched buckets merge in groups of this many, each sealed by a
+        # resume manifest; >= num_buckets is one whole-table group with
+        # no discovery job and whole-batch resume.
         self.buckets_per_group = buckets_per_group
         # count_input=False skips the pre-dedup events.count() (a full
         # extra pass over the source); metrics then report the post-LWW
@@ -100,95 +116,71 @@ class CdcOrchestrator:
         # count and the scan's file-open overhead with it. 0 disables
         # (callers schedule compaction themselves, like the bench).
         self.auto_compact_files_per_bucket = auto_compact_files_per_bucket
+        # foreachBatch micro-batch plans break CollectMetrics (the stream
+        # execution thread stack-overflows re-planning the observed
+        # node), so streaming drivers opt into the eager one-job input
+        # accounting (streaming/stream_apply.py) instead of the lazy
+        # Observation.
+        self.eager_accounting = eager_accounting
 
     def for_table(self, table: LakeTable) -> "CdcOrchestrator":
         """Same configuration over a different table handle — the WAP
         staging pattern (drive a branch handle through an orchestrator
         configured like the main one)."""
-        return CdcOrchestrator(
-            table,
-            buckets_per_group=self.buckets_per_group,
-            count_input=self.count_input,
-            messages_log=self.messages_log,
-            auto_compact_files_per_bucket=self.auto_compact_files_per_bucket,
-            null_key_policy=self.null_key_policy,
-        )
+        clone = copy.copy(self)
+        clone.table, clone.spark = table, table.spark
+        return clone
 
-    def _key_null_expr(self):
-        key_null = None
-        for k in self.table.key_cols:
-            c = F.col(k).isNull()
-            key_null = c if key_null is None else (key_null | c)
-        return key_null
-
-    def _account_input(self, events: DataFrame, batch_id: int):
-        """EAGER input accounting: (events, n_events, n_null_key) in AT
-        MOST one job. Used by the exception paths (snapshot handover,
-        late repair) whose early ``limit(1).count()`` guard actions would
-        corrupt a lazy Observation (a limit can stop before scanning
-        every row, so observed metrics from that action undercount). The
-        hot ``apply_batch`` path uses :meth:`_lazy_account_input` — same
-        numbers, ZERO extra pass."""
-        key_null = self._key_null_expr()
-        n_events = n_null = None
-        if self.count_input:
-            row = events.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum(key_null.cast("long")), F.lit(0)).alias("nn"),
-            ).collect()[0]
-            n_events, n_null = row["n"], row["nn"]
-            self._check_null_policy(n_null, batch_id)
-        if self.null_key_policy == "drop":
-            events = events.filter(~key_null)
-        return events, n_events, n_null
-
-    def _lazy_account_input(self, events: DataFrame):
-        """Zero-extra-job input accounting for the hot apply path: attach
-        an :class:`pyspark.sql.Observation` computing (total, null-key
-        count) INSIDE whatever job first materializes the batch (the
-        grouped path's bucket-count job, or the single-group path's merge
-        write) instead of running a dedicated ``agg().collect()`` pass
-        over the source — at sf0.1 that pass was ~40% of a batch's wall
-        time, and at scale it is a full extra read of the change stream.
-        Resolve with :meth:`_resolve_accounting` after the first action.
-        The "drop" policy's filter sits ABOVE the observation so dropped
-        rows still count (events_in is the pre-drop total, as before)."""
-        if not self.count_input:
-            if self.null_key_policy == "drop":
-                events = events.filter(~self._key_null_expr())
-            return events, None
-        from pyspark.sql import Observation
-
-        key_null = self._key_null_expr()
-        obs = Observation()
-        events = events.observe(
-            obs,
+    def _account_input(self, events: DataFrame, batch_id: int, lazy: bool = False):
+        """Input accounting: ``(events, counts)``, "drop" filter applied.
+        Eager (default): ``counts`` is (n_events, n_null_key) from AT MOST
+        one job — for the snapshot handover, whose ``limit(1).count()``
+        guard would corrupt a lazy Observation (a limit can stop before
+        scanning every row, so observed metrics undercount), and for
+        streaming drivers (``eager_accounting``). ``lazy=True``, the hot
+        apply path: ``counts`` is an Observation computed INSIDE the job
+        that first materializes the batch (bucket-count job or single-
+        group merge write) instead of a dedicated pass over the source —
+        at sf0.1 that pass was ~40% of a batch's wall time. Resolve it
+        with :meth:`_resolve_accounting`. The "drop" filter sits ABOVE the
+        observation, so events_in is the pre-drop total. count_input=False
+        counts nothing, and skips the "error" check: (None, None)."""
+        key_null = reduce(operator.or_, (F.col(k).isNull() for k in self.table.key_cols))
+        aggs = (
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(key_null.cast("long")), F.lit(0)).alias("nn"),
         )
+        counts = (None, None)
+        if self.count_input and lazy:
+            from pyspark.sql import Observation
+
+            counts = Observation()
+            events = events.observe(counts, *aggs)
+        elif self.count_input:
+            row = events.agg(*aggs).collect()[0]
+            counts = (row["n"], row["nn"])
+            self._check_null_policy(row["nn"], batch_id)
         if self.null_key_policy == "drop":
             events = events.filter(~key_null)
-        return events, obs
+        return events, counts
 
-    def _resolve_accounting(self, obs, batch_id: int, ensure: DataFrame | None = None):
-        """Read a :meth:`_lazy_account_input` observation after an action
-        materialized the observed plan. ``ensure`` forces a materializing
-        action first — only the resumed single-group path needs it (its
-        manifest made the write a no-op, so no job ran over the events).
-        Enforces the same null_key_policy='error' contract as the eager
-        path: the batch still fails BEFORE its atomic commit, so no bad
-        state becomes visible (the error now surfaces after the merge
-        compute instead of before it)."""
-        if obs is None:
-            return None, None
-        if isinstance(obs, tuple):  # eager_accounting already resolved
-            return obs
+    def _resolve_accounting(self, counts, batch_id: int, ensure: DataFrame | None = None):
+        """(n_events, n_null_key) from :meth:`_account_input`'s ``counts``.
+        A lazy Observation is read after an action materialized the
+        observed plan; ``ensure`` forces a materializing action first —
+        only a resumed single-group apply needs it (its manifest made the
+        write a no-op, so no job ran over the events). Enforces the same
+        null_key_policy='error' contract as the eager path: the batch
+        still fails BEFORE its atomic commit, so no bad state becomes
+        visible (the error surfaces after the merge compute instead of
+        before it)."""
+        if isinstance(counts, tuple):  # eager, or not counted
+            return counts
         if ensure is not None:
             ensure.count()
-        row = obs.get
-        n_events, n_null = row["n"], row["nn"]
-        self._check_null_policy(n_null, batch_id)
-        return n_events, n_null
+        row = counts.get
+        self._check_null_policy(row["nn"], batch_id)
+        return row["n"], row["nn"]
 
     def _check_null_policy(self, n_null, batch_id: int) -> None:
         if n_null and self.null_key_policy == "error":
@@ -219,13 +211,19 @@ class CdcOrchestrator:
             "group_buckets": group_buckets,  # None = whole-table single group
         }
 
-    def _manifest_valid(self, manifest: dict, geometry: dict, table_path: str) -> bool:
-        return manifest.get("geometry") == geometry and all(
-            self.table.fs.exists(os.path.join(table_path, rel))
+    def _sealed_manifest(self, path: str, geometry: dict) -> dict | None:
+        """A group's checkpoint manifest, if it was sealed under this
+        geometry and every file it lists still exists; else None."""
+        if not self.table.fs.exists(path):
+            return None
+        manifest = json.loads(self.table.fs.read_text(path))
+        valid = manifest.get("geometry") == geometry and all(
+            self.table.fs.exists(os.path.join(self.table.path, rel))
             for fmap in (manifest["files"], manifest.get("hist_files", {}))
             for fl in fmap.values()
             for rel in fl
         )
+        return manifest if valid else None
 
     def _lineage_rows(
         self, files: dict[str, list[str]], hist_delta: dict[str, list[str]]
@@ -239,19 +237,13 @@ class CdcOrchestrator:
         made it visible)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        paths: list[tuple[str, str]] = [
-            (b, rel)
-            for fmap in (files, hist_delta)
-            for b, fl in fmap.items()
-            for rel in fl
+        paths = [
+            (b, rel) for fmap in (files, hist_delta) for b, fl in fmap.items() for rel in fl
         ]
 
-        def meta(p: tuple[str, str]):
-            b, rel = p
+        def meta(rel: str):
             full = os.path.join(self.table.path, rel)
             return (
-                b,
-                rel,
                 self.table.fs.parquet_num_rows(full),
                 self.table.fs.parquet_column_minmax(full, "batch_id"),
             )
@@ -259,7 +251,8 @@ class CdcOrchestrator:
         rows: dict[str, int] = {}
         stats: dict[str, list] = {}
         with ThreadPoolExecutor(max_workers=16) as pool:
-            for b, rel, n, mm in pool.map(meta, paths):
+            footers = pool.map(meta, [rel for _b, rel in paths])
+            for (b, rel), (n, mm) in zip(paths, footers):
                 rows[b] = rows.get(b, 0) + n
                 if mm is not None:
                     stats[rel] = mm
@@ -287,7 +280,6 @@ class CdcOrchestrator:
         # by one knob.
         if self.table.snapshot.properties.get("index.bloom.column"):
             from tpc_di_spark.lake.maintenance import consolidate_blooms
-            from tpc_di_spark.lake.table import CommitConflict
 
             try:
                 brec = consolidate_blooms(
@@ -334,22 +326,33 @@ class CdcOrchestrator:
         resolves the duelling-driver case where the competing writer
         committed THIS batch id. Bounded (default 2 re-computations) so
         livelock surfaces as the underlying conflict."""
-        from tpc_di_spark.lake.table import CommitConflict
+        return self._retry_conflicts(
+            lambda: self._apply_batch_once(events, batch_id), batch_id, retries
+        )
 
-        try:
-            return self._apply_batch_once(events, batch_id)
-        except CommitConflict:
-            if retries <= 0:
-                raise
-            staging = self._staging_dir(batch_id)
-            if self.table.fs.exists(staging):
-                self.table.fs.rmtree(staging)
-            self.table.refresh()
-            return self.apply_batch(events, batch_id, retries=retries - 1)
+    def _retry_conflicts(self, attempt, batch_id: int, retries: int) -> dict:
+        """Run ``attempt``; on :class:`CommitConflict` drop its staging
+        manifests, refresh, and run it again, at most ``retries`` times."""
+        while True:
+            try:
+                return attempt()
+            except CommitConflict:
+                if retries <= 0:
+                    raise
+                retries -= 1
+                staging = self._staging_dir(batch_id)
+                if self.table.fs.exists(staging):
+                    self.table.fs.rmtree(staging)
+                self.table.refresh()
 
-    def _apply_batch_once(self, events: DataFrame, batch_id: int) -> dict:
-        """One optimistic attempt of :meth:`apply_batch`."""
-        t0 = time.monotonic()
+    def _begin(self, batch_id: int, out_of_order: str | None = None) -> dict | None:
+        """Shared entry of every apply: validate the id, read the latest
+        snapshot, and return the skip record if the batch already
+        committed (exactly-once), else None. ``out_of_order`` names an
+        apply that finds its keys through ``changed_keys_since`` (late
+        batch, snapshot chunk): that reads DATA files, so keys touched
+        only in uncompacted MoR deltas are invisible to it and applying
+        now could resurrect a delta-deleted key — refused."""
         if batch_id <= 0:
             # Negative batch ids are the delete-tombstone marker
             # (cdc/apply.py) — real batches must stay strictly positive.
@@ -357,18 +360,29 @@ class CdcOrchestrator:
         self.table.refresh()
         if self.table.is_batch_committed(batch_id):
             return {"batch_id": batch_id, "skipped": "already-committed"}
+        if out_of_order and pending_delta_batches(self.table):
+            raise ValueError(
+                "pending MoR delta batches exist — compact them before "
+                f"applying {out_of_order} (their touched keys are not yet "
+                "visible to changed_keys_since)"
+            )
+        return None
+
+    def _apply_batch_once(
+        self, events: DataFrame, batch_id: int, t0: float | None = None, extra: dict | None = None
+    ) -> dict:
+        """One optimistic attempt of :meth:`apply_batch`. ``t0`` and
+        ``extra`` let :meth:`apply_late_batch` time the whole repair and
+        add its own fields to the one record this writes."""
+        t0 = time.monotonic() if t0 is None else t0
+        if skipped := self._begin(batch_id):
+            return skipped
 
         self._maybe_evolve(events, batch_id)
         events = align_events(events, self.table)
-        if getattr(self, "eager_accounting", False):
-            # foreachBatch micro-batch plans break CollectMetrics (the
-            # stream execution thread stack-overflows re-planning the
-            # observed node), so streaming drivers opt back into the
-            # eager one-job accounting (streaming/stream_apply.py).
-            events, n_eager, nn_eager = self._account_input(events, batch_id)
-            obs = (n_eager, nn_eager)
-        else:
-            events, obs = self._lazy_account_input(events)
+        events, counts = self._account_input(
+            events, batch_id, lazy=not self.eager_accounting
+        )
 
         # ONE exchange for the whole batch: repartition the events to the
         # table's bucket layout BEFORE the LWW groupBy. The groupBy's
@@ -381,279 +395,185 @@ class CdcOrchestrator:
         # instead of O(partitions) — CDC batches carry ~1-2 events/key,
         # and the hot-CONVERSATION skew story is unchanged (full-key
         # bucketing spreads a hot conversation's turns over all buckets).
-        deduped = lww_dedup(
-            self.table.bucket_partitioned(events), self.table.key_cols
+        deduped = self.table.with_bucket(
+            lww_dedup(self.table.bucket_partitioned(events), self.table.key_cols)
         )
-        deduped = self.table.with_bucket(deduped)
 
-        if self.buckets_per_group >= self.table.num_buckets:
-            # Single-group fast path: the batch is merged against the whole
-            # table in ONE pass (generation -> dedup shuffle -> merge join
-            # -> write), skipping the separate touched-bucket discovery job
-            # that would recompute the dedup. Right when batches touch most
-            # buckets anyway (bulk replays, benches); bucket-pruned multi-
-            # group mode remains the default for sparse batches.
-            return self._apply_single_group(
-                events, deduped, batch_id, obs, t0
-            )
-
+        # Single-group mode is ONE group whose buckets are None — the
+        # whole current family, merged in one pass (generation -> dedup
+        # shuffle -> merge join -> write) with no touched-bucket discovery
+        # job and no persist. Right when batches touch most buckets anyway
+        # (bulk replays, benches); bucket-pruned multi-group mode remains
+        # the default for sparse batches.
+        single = self.buckets_per_group >= self.table.num_buckets
+        groups: list[list | None] = [None]
+        staging = self._staging_dir(batch_id)
+        all_files: dict[str, list[str]] = {}
+        all_hist: dict[str, list[str]] = {}
+        all_stats: dict[str, list] = {}
+        group_metrics = []
         try:
-            # Persist BEFORE the bucket-count job so that ONE pass
-            # computes the dedup DAG: the count materializes the cache
-            # and every group's merge reads from it. (The old order —
-            # persist after the count, only for multi-group batches —
-            # recomputed the full upstream DAG once for the count and
-            # again for the first group; for changelog-derived batches
-            # that DAG is itself joins over the parent table.) At
-            # cluster scale this caches the batch (<= events), never the
-            # table.
-            deduped.persist()
-            # One job yields both the touched-bucket set and per-bucket
-            # event counts (metadata-sized collect: <= num_buckets rows).
-            bucket_counts = {
-                r[0]: r[1]
-                for r in deduped.groupBy(LakeTable.BUCKET_COL).count().collect()
-            }
-            # That job materialized the observed events, so the input
-            # accounting resolves here at zero extra cost — and the
-            # null_key_policy='error' check still fires BEFORE any write.
-            n_events, n_null = self._resolve_accounting(obs, batch_id)
-            touched = sorted(bucket_counts)
-            groups = [
-                touched[i : i + self.buckets_per_group]
-                for i in range(0, len(touched), self.buckets_per_group)
-            ]
-            staging = self._staging_dir(batch_id)
+            if not single:
+                # Persist BEFORE the bucket-count job so that ONE pass
+                # computes the dedup DAG: the count materializes the cache
+                # and every group's merge reads from it (for changelog-
+                # derived batches that DAG is itself joins over the parent
+                # table). At cluster scale this caches the batch (<=
+                # events), never the table.
+                deduped.persist()
+                # One job yields both the touched-bucket set and per-bucket
+                # event counts (metadata-sized collect: <= num_buckets rows).
+                bucket_counts = dict(deduped.groupBy(LakeTable.BUCKET_COL).count().collect())
+                # That job materialized the observed events, so the input
+                # accounting resolves here at zero extra cost — and the
+                # null_key_policy='error' check still fires BEFORE any write.
+                n_events, n_null = self._resolve_accounting(counts, batch_id)
+                touched = sorted(bucket_counts)
+                groups = [
+                    touched[i : i + self.buckets_per_group]
+                    for i in range(0, len(touched), self.buckets_per_group)
+                ]
             self.table.fs.makedirs(staging)
-
-            all_files: dict[str, list[str]] = {}
-            all_hist: dict[str, list[str]] = {}
-            all_stats: dict[str, list] = {}
-            group_metrics = []
-            n_deduped = 0
             for gi, buckets in enumerate(groups):
                 manifest_path = os.path.join(staging, f"group-{gi:03d}.done.json")
                 geometry = self._geometry(buckets)
-                if self.table.fs.exists(manifest_path):
-                    manifest = json.loads(self.table.fs.read_text(manifest_path))
-                    if self._manifest_valid(manifest, geometry, self.table.path):
-                        all_files.update(manifest["files"])
-                        for b, fl in manifest.get("hist_files", {}).items():
-                            all_hist.setdefault(b, []).extend(fl)
-                        all_stats.update(manifest.get("file_stats", {}))
-                        group_metrics.append({**manifest["metrics"], "resumed": True})
-                        n_deduped += manifest["metrics"].get("events", 0)
-                        continue
-                g0 = time.monotonic()
-                src = deduped.filter(F.col(LakeTable.BUCKET_COL).isin(buckets))
-                # Only the CURRENT file family joins the merge: history
-                # files are immutable closed versions the merge can never
-                # touch — skipping them halves-or-better the per-batch
-                # scan as history accumulates. read_bucketed exposes the
-                # group's buckets as a catalog bucketed scan so the merge
-                # join adds no Exchange above the table side.
-                if any(
-                    self.table.snapshot.files.get(str(b)) for b in buckets
-                ):
-                    tgt, aligned = self.table.read_bucketed(
-                        family="current", buckets=buckets
+                if manifest := self._sealed_manifest(manifest_path, geometry):
+                    manifest["metrics"]["resumed"] = True
+                else:
+                    g0 = time.monotonic()
+                    src = deduped
+                    if buckets is not None:
+                        src = src.filter(F.col(LakeTable.BUCKET_COL).isin(buckets))
+                    files, hist_delta, lineage_rows, fstats = self._merge_write(
+                        src.drop(LakeTable.BUCKET_COL), batch_id, buckets,
+                        f"batch-{batch_id:06d}/group-{gi:03d}",
                     )
-                    merged = merge_batch_rows(
-                        tgt, src.drop(LakeTable.BUCKET_COL), batch_id, self.table,
-                    )
-                else:  # no current rows in this group: insert-only projection
-                    merged = insert_only_rows(
-                        src.drop(LakeTable.BUCKET_COL), batch_id, self.table
-                    )
-                    aligned = self.table.spark_aligned
-                tag = f"batch-{batch_id:06d}/group-{gi:03d}"
-                files, hist_delta = self.table.write_data_files_split(
-                    self.table.with_bucket(merged), tag,
-                    # Skip the write exchange only when the merge inputs
-                    # really were in the bucket layout (bucketed scan +
-                    # bucket_partitioned events, or an insert-only
-                    # projection of the bucket-partitioned batch). When
-                    # read_bucketed fell back to a plain scan the join
-                    # output's layout is the planner's choice — cluster
-                    # it, or the partitionBy write can emit partitions x
-                    # buckets small files. See LakeTable._bucket_clustered.
-                    assume_bucket_partitioned=aligned,
-                )
-                lineage_rows, fstats = self._lineage_rows(files, hist_delta)
-                n_src = sum(bucket_counts[b] for b in buckets)
-                n_deduped += n_src
-                metrics = {
-                    "group": gi,
-                    "buckets": buckets,
-                    "events": n_src,
-                    "rows_written": {str(k): v for k, v in lineage_rows.items()},
-                    "secs": round(time.monotonic() - g0, 3),
-                }
-                self.table.fs.replace_text(
-                    manifest_path,
-                    json.dumps({
+                    manifest = {
                         "files": files,
                         "hist_files": hist_delta,
                         "file_stats": fstats,
-                        "metrics": metrics,
+                        "metrics": {
+                            "group": gi,
+                            "buckets": (
+                                sorted(int(b) for b in set(files) | set(hist_delta))
+                                if buckets is None else buckets
+                            ),
+                            "events": (
+                                None if buckets is None
+                                else sum(bucket_counts[b] for b in buckets)
+                            ),
+                            "rows_written": lineage_rows,
+                            "secs": round(time.monotonic() - g0, 3),
+                        },
                         "geometry": geometry,
-                    }),
-                )
-                all_files.update(files)
-                for b, fl in hist_delta.items():
+                    }
+                    self.table.fs.replace_text(manifest_path, json.dumps(manifest))
+                all_files.update(manifest["files"])
+                for b, fl in manifest.get("hist_files", {}).items():
                     all_hist.setdefault(b, []).extend(fl)
-                all_stats.update(fstats)
-                group_metrics.append(metrics)
+                all_stats.update(manifest.get("file_stats", {}))
+                group_metrics.append(manifest["metrics"])
         finally:
             deduped.unpersist(blocking=False)
 
-        before = self.table.snapshot.snapshot_id
-        snap = self.table.commit(
-            new_files_by_bucket=all_files,
-            mode="replace",
-            replaced_buckets=touched,
-            batch_id=batch_id,
-            append_hist_by_bucket=all_hist,
-            new_file_stats=all_stats,
-            summary={"operation": "cdc-apply", "events": n_events},
+        if single:
+            # The write above (or, on resume, a forced pass — the manifest
+            # made the write a no-op, so nothing materialized the events
+            # yet) resolves the lazy accounting; the error policy still
+            # fires before the commit below, so no bad state becomes
+            # visible.
+            n_events, n_null = self._resolve_accounting(
+                counts, batch_id,
+                ensure=events if group_metrics[0].get("resumed") else None,
+            )
+            # Every pre-existing CURRENT-family bucket was merged (and may
+            # have lost all its rows to deletes), so the replaced set is
+            # old ∪ new current buckets; history is append-only.
+            replaced = set(self.table.snapshot.files) | set(all_files)
+        else:
+            replaced = touched
+        return self._commit_and_record(
+            batch_id, t0,
+            {
+                "new_files_by_bucket": all_files,
+                "mode": "replace",
+                "replaced_buckets": replaced,
+                "append_hist_by_bucket": all_hist,
+                "new_file_stats": all_stats,
+                "summary": {"operation": "cdc-apply", "events": n_events},
+            },
+            {
+                "events_in": n_events,
+                "events_null_key": n_null,
+                "events_after_lww": None if single else sum(g["events"] for g in group_metrics),
+                "buckets_touched": len(replaced),
+                "groups": group_metrics,
+                **(extra or {}),
+            },
+            staging=staging,
         )
+
+    def _merge_write(
+        self, src: DataFrame, batch_id: int, buckets: list | None, tag: str
+    ) -> tuple[dict, dict, dict[str, int], dict[str, list]]:
+        """Merge deduped events (no bucket column) into the current family
+        of ``buckets`` (None = every bucket) and write the family split.
+        Returns (current files, history files, per-bucket rows written,
+        per-file batch_id stats)."""
+        # Only the CURRENT file family joins the merge: history files are
+        # immutable closed versions the merge can never touch — skipping
+        # them halves-or-better the per-batch scan as history accumulates.
+        # read_bucketed exposes the buckets as a catalog bucketed scan so
+        # the merge join adds no Exchange above the table side. No current
+        # rows (historical load / bootstrap): insert-only projection.
+        if any(
+            fl for b, fl in self.table.snapshot.files.items()
+            if buckets is None or int(b) in buckets
+        ):
+            tgt, aligned = self.table.read_bucketed(family="current", buckets=buckets)
+            merged = merge_batch_rows(tgt, src, batch_id, self.table)
+        else:
+            merged = insert_only_rows(src, batch_id, self.table)
+            aligned = self.table.spark_aligned
+        files, hist_delta = self.table.write_data_files_split(
+            self.table.with_bucket(merged), tag,
+            # Skip the write exchange only when the merge inputs really
+            # were in the bucket layout (bucketed scan + bucket_partitioned
+            # events, or an insert-only projection of the bucket-
+            # partitioned batch). When read_bucketed fell back to a plain
+            # scan the join output's layout is the planner's choice —
+            # cluster it, or the partitionBy write can emit partitions x
+            # buckets small files. See LakeTable._bucket_clustered.
+            assume_bucket_partitioned=aligned,
+        )
+        return (files, hist_delta, *self._lineage_rows(files, hist_delta))
+
+    def _commit_and_record(
+        self, batch_id: int, t0: float, commit: dict, fields: dict, staging: str | None = None
+    ) -> dict:
+        """The atomic snapshot commit of an apply plus its record: commit
+        ``commit`` (LakeTable.commit arguments) under ``batch_id``, drop
+        the staging manifests, then build the record from ``fields``, run
+        the post-commit compaction policy, write ``_metrics/`` and emit
+        the status row."""
+        before = self.table.snapshot.snapshot_id
+        snap = self.table.commit(batch_id=batch_id, **commit)
+        if staging is not None:
+            # The staging manifests memoize only THIS attempt's output.
+            self.table.fs.rmtree(staging)
         if snap.snapshot_id == before:
             # commit() hit its exactly-once guard without flipping: a
             # duelling driver landed this batch id first. Our salted-
-            # attempt files are unreferenced (expire-swept); the staging
-            # manifests memoize only OUR attempt, so drop them with it.
-            self.table.fs.rmtree(staging)
+            # attempt files are unreferenced (expire-swept).
             return {"batch_id": batch_id, "skipped": "already-committed"}
-        self.table.fs.rmtree(staging)
         elapsed = time.monotonic() - t0
+        n = fields.get("events_in") or fields.get("events_after_lww")
         record = {
             "batch_id": batch_id,
             "snapshot_id": snap.snapshot_id,
-            "events_in": n_events,
-            "events_null_key": n_null,
-            "events_after_lww": n_deduped,
-            "buckets_touched": len(touched),
-            "groups": group_metrics,
+            **fields,
             "secs": round(elapsed, 3),
-            "events_per_sec": (
-                round((n_events or n_deduped) / elapsed, 1) if elapsed > 0 else None
-            ),
-        }
-        self._maybe_auto_compact(record)
-        self.table.fs.makedirs(os.path.dirname(self._metrics_path(batch_id)))
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        self._emit_status(record)
-        return record
-
-    def _apply_single_group(
-        self, events, deduped, batch_id, obs, t0
-    ) -> dict:
-        """One-pass apply of a batch that spans (potentially) every bucket.
-        Same checkpoint manifest + atomic commit as the grouped path; the
-        resume granularity is the whole batch. ``obs`` is the lazy input-
-        accounting observation — it resolves off the merge write itself
-        (the batch's ONLY pass over the events), and the null-key error
-        policy is enforced before the atomic commit."""
-        staging = self._staging_dir(batch_id)
-        self.table.fs.makedirs(staging)
-        manifest_path = os.path.join(staging, "group-000.done.json")
-        geometry = self._geometry(None)
-        resumed = False
-        hist_delta: dict[str, list[str]] = {}
-        fstats: dict[str, list] = {}
-        if self.table.fs.exists(manifest_path):
-            manifest = json.loads(self.table.fs.read_text(manifest_path))
-            if self._manifest_valid(manifest, geometry, self.table.path):
-                files = manifest["files"]
-                hist_delta = manifest.get("hist_files", {})
-                fstats = manifest.get("file_stats", {})
-                metrics = {**manifest["metrics"], "resumed": True}
-                resumed = True
-        if not resumed:
-            g0 = time.monotonic()
-            # Current family only — history is append-only and immutable,
-            # so the merge neither reads nor rewrites it (the r02 shape
-            # re-read AND re-wrote every closed version every batch; at
-            # the 10^10 design point history is the bulk of the table).
-            # Bucketed scan: the full-outer merge join plans with NO
-            # Exchange above the table side, and its output stays
-            # physically bucket-partitioned so the write skips its
-            # repartition too — the batch's only shuffle is the incoming
-            # events' bucket_partitioned exchange in apply_batch. An
-            # empty current family (historical load / bootstrap) skips
-            # the join entirely: insert-only projection.
-            if self.table.snapshot.files:
-                tgt, aligned = self.table.read_bucketed(family="current")
-                merged = merge_batch_rows(
-                    tgt, deduped.drop(LakeTable.BUCKET_COL), batch_id, self.table
-                )
-            else:
-                merged = insert_only_rows(
-                    deduped.drop(LakeTable.BUCKET_COL), batch_id, self.table
-                )
-                aligned = self.table.spark_aligned
-            tag = f"batch-{batch_id:06d}/group-000"
-            files, hist_delta = self.table.write_data_files_split(
-                self.table.with_bucket(merged), tag,
-                assume_bucket_partitioned=aligned,
-            )
-            lineage_rows, fstats = self._lineage_rows(files, hist_delta)
-            metrics = {
-                "group": 0,
-                "buckets": sorted(int(b) for b in set(files) | set(hist_delta)),
-                "events": None,
-                "rows_written": lineage_rows,
-                "secs": round(time.monotonic() - g0, 3),
-            }
-            self.table.fs.replace_text(
-                manifest_path,
-                json.dumps({
-                    "files": files,
-                    "hist_files": hist_delta,
-                    "file_stats": fstats,
-                    "metrics": metrics,
-                    "geometry": geometry,
-                }),
-            )
-        # The write above (or, on resume, a forced pass — the manifest
-        # made the write a no-op, so nothing materialized the events yet)
-        # resolves the lazy accounting; the error policy still fires
-        # before the commit below, so no bad state becomes visible.
-        n_events, n_null = self._resolve_accounting(
-            obs, batch_id, ensure=events if resumed else None
-        )
-
-        # Every pre-existing CURRENT-family bucket was merged (and may
-        # have lost all its rows to deletes), so the replaced set is
-        # old ∪ new current buckets; history is append-only.
-        replaced = set(self.table.snapshot.files) | set(files)
-        before = self.table.snapshot.snapshot_id
-        snap = self.table.commit(
-            new_files_by_bucket=files,
-            mode="replace",
-            replaced_buckets=replaced,
-            batch_id=batch_id,
-            append_hist_by_bucket=hist_delta,
-            new_file_stats=fstats,
-            summary={"operation": "cdc-apply", "events": n_events},
-        )
-        if snap.snapshot_id == before:
-            # Exactly-once no-op (duelling driver won this batch id) —
-            # see the grouped path; our files/manifests are ours alone.
-            self.table.fs.rmtree(staging)
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        self.table.fs.rmtree(staging)
-        elapsed = time.monotonic() - t0
-        record = {
-            "batch_id": batch_id,
-            "snapshot_id": snap.snapshot_id,
-            "events_in": n_events,
-            "events_null_key": n_null,
-            "events_after_lww": None,
-            "buckets_touched": len(replaced),
-            "groups": [metrics],
-            "secs": round(elapsed, 3),
-            "events_per_sec": round(n_events / elapsed, 1) if n_events and elapsed > 0 else None,
+            "events_per_sec": round(n / elapsed, 1) if n and elapsed > 0 else None,
         }
         self._maybe_auto_compact(record)
         self.table.fs.makedirs(os.path.dirname(self._metrics_path(batch_id)))
@@ -699,27 +619,11 @@ class CdcOrchestrator:
         table born at handover).
         """
         t0 = time.monotonic()
-        if batch_id <= 0:
-            raise ValueError(f"batch_id must be >= 1, got {batch_id}")
-        self.table.refresh()
-        if self.table.is_batch_committed(batch_id):
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        from tpc_di_spark.cdc.mor import pending_delta_batches
-        from tpc_di_spark.lake.changelog import changed_keys_since
-
-        if pending_delta_batches(self.table):
-            # changed_keys_since reads DATA files; keys touched only in
-            # uncompacted MoR deltas are invisible to it, so applying a
-            # chunk now could resurrect a delta-deleted key.
-            raise ValueError(
-                "pending MoR delta batches exist — compact them before "
-                "applying a snapshot chunk (their touched keys are not "
-                "yet visible to changed_keys_since)"
-            )
-
+        if skipped := self._begin(batch_id, out_of_order="a snapshot chunk"):
+            return skipped
         self._maybe_evolve(events, batch_id)
         events = align_events(events, self.table)
-        events, n_events, n_null = self._account_input(events, batch_id)
+        events, (n_events, n_null) = self._account_input(events, batch_id)
         # A snapshot is a set of point-in-time READS — 'D' cannot occur.
         # Its presence means tail events were routed into the snapshot
         # path, where their deletes would be silently ignored: refuse.
@@ -751,41 +655,30 @@ class CdcOrchestrator:
             self.table.with_bucket(rows), tag
         )
         lineage_rows, fstats = self._lineage_rows(files, {})
-        before = self.table.snapshot.snapshot_id
-        snap = self.table.commit(
-            new_files_by_bucket=files,
-            mode="append",
-            batch_id=batch_id,
-            new_file_stats=fstats,
-            summary={
-                "operation": "snapshot-handover",
-                "events": n_events,
+        inserted = sum(lineage_rows.values())
+        return self._commit_and_record(
+            batch_id, t0,
+            {
+                "new_files_by_bucket": files,
+                "mode": "append",
+                "new_file_stats": fstats,
+                "summary": {
+                    "operation": "snapshot-handover",
+                    "events": n_events,
+                    "tail_start_batch": tail_start_batch,
+                },
+            },
+            {
+                "events_in": n_events,
+                "events_null_key": n_null,
+                "rows_inserted": inserted,
+                "rows_dropped_stale_or_present": (
+                    (n_events - inserted) if n_events is not None else None
+                ),
+                "buckets_touched": len(files),
                 "tail_start_batch": tail_start_batch,
             },
         )
-        if snap.snapshot_id == before:
-            # Exactly-once no-op: a duelling driver landed this chunk's
-            # batch id first; our salted-attempt files are orphans.
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        elapsed = time.monotonic() - t0
-        inserted = sum(lineage_rows.values()) if lineage_rows else 0
-        record = {
-            "batch_id": batch_id,
-            "snapshot_id": snap.snapshot_id,
-            "events_in": n_events,
-            "events_null_key": n_null,
-            "rows_inserted": inserted,
-            "rows_dropped_stale_or_present": (
-                (n_events - inserted) if n_events is not None else None
-            ),
-            "buckets_touched": len(files),
-            "tail_start_batch": tail_start_batch,
-            "secs": round(elapsed, 3),
-        }
-        self.table.fs.makedirs(os.path.dirname(self._metrics_path(batch_id)))
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        self._emit_status(record)
-        return record
 
     def apply_late_batch(
         self,
@@ -829,28 +722,27 @@ class CdcOrchestrator:
         snapshot handover: pending deltas hide touched keys from
         ``changed_keys_since``, so compaction must run first.
         """
-        from tpc_di_spark.lake.table import CommitConflict
+        return self._retry_conflicts(
+            # A concurrent commit landing between the changed-keys read
+            # and the merge CAS makes the supersession set itself stale
+            # (the new batch may outrank this one), so the WHOLE late
+            # apply recomputes, not just the merge.
+            lambda: self._apply_late_once(events, batch_id, quarantine_dir),
+            batch_id, retries,
+        )
 
+    def _apply_late_once(
+        self, events: DataFrame, batch_id: int, quarantine_dir: str | None
+    ) -> dict:
         t0 = time.monotonic()
-        if batch_id <= 0:
-            raise ValueError(f"batch_id must be >= 1, got {batch_id}")
-        self.table.refresh()
-        if self.table.is_batch_committed(batch_id):
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        from tpc_di_spark.cdc.mor import pending_delta_batches
-
-        if pending_delta_batches(self.table):
-            raise ValueError(
-                "pending MoR delta batches exist — compact them before "
-                "applying a late batch (their touched keys are not yet "
-                "visible to the supersession check)"
-            )
+        if skipped := self._begin(batch_id, out_of_order="a late batch"):
+            return skipped
         self._maybe_evolve(events, batch_id)
         events = align_events(events, self.table)
-        key = list(self.table.key_cols)
         touched = self._superseded_keys(batch_id)
         marked = events.join(
-            touched.withColumn("_superseded", F.lit(True)), on=key, how="left"
+            touched.withColumn("_superseded", F.lit(True)),
+            on=list(self.table.key_cols), how="left",
         )
         marked.persist()
         try:
@@ -861,35 +753,12 @@ class CdcOrchestrator:
                     os.path.join(quarantine_dir, f"batch-{batch_id:06d}")
                 )
             fresh = marked.filter(F.col("_superseded").isNull()).drop("_superseded")
-            try:
-                record = self.apply_batch(fresh, batch_id, retries=0)
-            except CommitConflict:
-                # A concurrent commit landed between our changed-keys read
-                # and the merge CAS: the supersession set itself is stale
-                # (the new batch may outrank this one), so the WHOLE late
-                # apply recomputes, not just the merge.
-                if retries <= 0:
-                    raise
-                marked.unpersist(blocking=False)
-                staging = self._staging_dir(batch_id)
-                if self.table.fs.exists(staging):
-                    self.table.fs.rmtree(staging)
-                self.table.refresh()
-                return self.apply_late_batch(
-                    events, batch_id, quarantine_dir, retries=retries - 1
-                )
+            return self._apply_batch_once(
+                fresh, batch_id, t0=t0,
+                extra={"late_apply": True, "events_dropped_superseded": n_stale},
+            )
         finally:
             marked.unpersist(blocking=False)
-        if record.get("skipped"):
-            return record
-        record = {
-            **record,
-            "late_apply": True,
-            "events_dropped_superseded": n_stale,
-            "secs": round(time.monotonic() - t0, 3),
-        }
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        return record
 
     def _superseded_keys(self, batch_id: int) -> DataFrame:
         """EXACT set of keys changed by batches with id > ``batch_id``.
@@ -906,13 +775,6 @@ class CdcOrchestrator:
         expired it — a missed close would resurrect a newer delete, so
         "repair window passed" must be an error, not a silent wrong
         answer)."""
-        from tpc_di_spark.lake.changelog import (
-            _closing_batch_of,
-            changed_keys_since,
-            rows_closed_in,
-            rows_created_in,
-        )
-
         key = list(self.table.key_cols)
         # Gate the fast path STRUCTURALLY, not via retained snapshot
         # history: a compaction erases closing tags from the files it
@@ -930,20 +792,18 @@ class CdcOrchestrator:
         )
         if tags_intact:
             return changed_keys_since(self.table, batch_id).select(*key)
-        after = [
-            b for b in sorted(self.table.snapshot.committed_batches) if b > batch_id
-        ]
-        touched = None
-        for b in after:
-            part = rows_created_in(self.table, b).select(*key).unionByName(
+        parts = [
+            rows_created_in(self.table, b).select(*key).unionByName(
                 rows_closed_in(
                     self.table, b, include_tombstones=True, strict=True
                 ).select(*key)
             )
-            touched = part if touched is None else touched.unionByName(part)
-        if touched is None:  # nothing committed after the late id
+            for b in sorted(self.table.snapshot.committed_batches)
+            if b > batch_id
+        ]
+        if not parts:  # nothing committed after the late id
             return self.table.read(family="current").select(*key).limit(0)
-        return touched.distinct()
+        return reduce(DataFrame.unionByName, parts).distinct()
 
     def _emit_status(self, record: dict) -> None:
         if self.messages_log is None:
@@ -972,48 +832,36 @@ class CdcOrchestrator:
         nothing committed, the delta stays pending, and the retry writes
         a fresh salted attempt (the killed attempt's files are
         unreferenced orphans, expire-swept)."""
-        import time as _time
-
-        from tpc_di_spark.cdc.mor import pending_delta_batches
-
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         deduped = lww_dedup(
             self.table.bucket_partitioned(align_events(events, self.table)),
             self.table.key_cols,
         )
-        tgt, aligned = self.table.read_bucketed(family="current")
-        merged = merge_batch_rows(tgt, deduped, orig_batch_id, self.table)
-        tag = f"compact-delta-{orig_batch_id:06d}"
-        files, hist_delta = self.table.write_data_files_split(
-            self.table.with_bucket(merged), tag,
-            assume_bucket_partitioned=aligned,
+        files, hist_delta, _rows, fstats = self._merge_write(
+            deduped, orig_batch_id, None, f"compact-delta-{orig_batch_id:06d}"
         )
-        replaced = set(self.table.snapshot.files) | set(files)
-
         props = dict(self.table.snapshot.properties)
-        remaining = [
+        props["delta_batches"] = [
             b for b in pending_delta_batches(self.table) if b["batch_id"] != orig_batch_id
         ]
-        props["delta_batches"] = remaining
         snap = self.table.commit(
             new_files_by_bucket=files,
             mode="replace",
-            replaced_buckets=replaced,
+            replaced_buckets=set(self.table.snapshot.files) | set(files),
             batch_id=None,
             append_hist_by_bucket=hist_delta,
+            new_file_stats=fstats,
             summary={"operation": "compact-delta", "delta_batch": orig_batch_id},
             new_properties=props,
         )
         return {
             "delta_batch": orig_batch_id,
             "snapshot_id": snap.snapshot_id,
-            "secs": round(_time.monotonic() - t0, 3),
+            "secs": round(time.monotonic() - t0, 3),
         }
 
     # --------------------------------------------------------------- replay
-    def replay(
-        self, batches: Sequence[tuple[int, DataFrame]]
-    ) -> list[dict]:
+    def replay(self, batches: Sequence[tuple[int, DataFrame]]) -> list[dict]:
         """Apply batches strictly in order (the reference's Batch2→Batch3
         sequencing, report §4.3). Already-committed batches are skipped."""
         return [self.apply_batch(df, bid) for bid, df in batches]

@@ -47,7 +47,9 @@ from __future__ import annotations
 
 import json
 import os
+from collections import defaultdict
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -431,22 +433,14 @@ def apply_batch_atomic_wap(
             continue
         for c in audit_checks.get(name, []) if audit_checks else []:
             pending.append((name, wap, c))
-    check_results = _run_checks([(w, c) for _n, w, c in pending])
+    by_table: dict[str, list[dict]] = defaultdict(list)
+    for name in published:
+        by_table[name].append({"check": "already-published", "ok": True, "table": name})
+    for (name, _w, _c), r in zip(pending, _run_checks([(w, c) for _n, w, c in pending])):
+        by_table[name].append({**r, "table": name})
+    all_results = [r for name in sorted(branches) for r in by_table[name]]
 
-    all_results: list[dict] = []
-    failed = False
-    for name, _wap in sorted(branches.items()):
-        if name in published:
-            all_results.append(
-                {"check": "already-published", "ok": True, "table": name}
-            )
-            continue
-        for (n, _w, _c), r in zip(pending, check_results):
-            if n == name:
-                all_results.append({**r, "table": name})
-                failed = failed or not r["ok"]
-
-    if failed:
+    if not all(r["ok"] for r in all_results):
         for wap in branches.values():
             wap.abort()
         raise AuditFailed(all_results)
@@ -455,9 +449,7 @@ def apply_batch_atomic_wap(
     for name, wap in sorted(branches.items()):
         wap.publish()
         txn.stage(name, wap.base)
-        records[name]["wap_audit"] = [
-            r for r in all_results if r["table"] == name
-        ]
+        records[name]["wap_audit"] = by_table[name]
     txn.commit(
         {
             "operation": "cdc-multi-table-wap",

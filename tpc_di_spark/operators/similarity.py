@@ -88,16 +88,6 @@ def check_embedding_domain(df: DataFrame, col: str, limit: float = 100.0) -> Dat
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, alias: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        alias,
-        F.try_divide(
-            _dot(F.col(a), F.col(b)).cast("double"),
-            _norm(F.col(a)) * _norm(F.col(b)),
-        ),
-    )
-
-
 def cosine_topk_bruteforce(
     emb: DataFrame,
     id_col: str,

@@ -97,10 +97,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    """Stop the active session (used between scaling-bench runs)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

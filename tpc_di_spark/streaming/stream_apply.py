@@ -123,13 +123,7 @@ def start_cdc_stream(
             from tpc_di_spark.lake.wap import AuditFailed, WapBranch
 
             wap = WapBranch.begin(orchestrator.table, f"epoch-{int(epoch_id):06d}")
-            staged_orch = CdcOrchestrator(
-                wap.staged,
-                buckets_per_group=orchestrator.buckets_per_group,
-                count_input=orchestrator.count_input,
-            )
-            staged_orch.eager_accounting = True  # micro-batch plan (see above)
-            staged_orch.apply_batch(batch_df, bid)
+            orchestrator.for_table(wap.staged).apply_batch(batch_df, bid)
             try:
                 wap.audit(audit_checks)
                 wap.publish()
